@@ -1,264 +1,28 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 
-/** Round-6 optimization-side instrumentation (guide §1) — a SEPARATE main so
-  * the frozen driver bench ([[Bench]]) is untouched. Modes (first arg):
+/** Executor-scaled frontier-expansion probe — a SEPARATE main so the frozen
+  * driver bench ([[Bench]]) is untouched. One mode:
   *
-  *  - `explain q1,q2,..` — dump `.explain("formatted")` of each named query
-  *    to `plans/r06/<query>_<suffix>.txt` (suffix = 2nd arg, default "plan").
-  *  - `time q1,q2,.. [reps]` — time each named query `reps` times (default 3)
-  *    with the SAME action the frozen bench uses (`.count()`), fresh plan per
-  *    rep, report min/median; `all` runs the full suite once in bench order.
-  *  - `noop q1,q2,.. [reps]` — same but through the noop sink (guide §1.4):
-  *    every column of every row computed, no count-only pruning.
-  *  - `stages q` — run one query with a stage-completion listener so the
-  *    per-stage wall/task breakdown is visible on stderr.
+  *  - `cluster [pairs]` — run the dataflow rep (one `Crawler.expandOnce`
+  *    over the bench corpus at `SPARK_GRAFT_BENCH_CORPUS`) on Spark's
+  *    `local-cluster` master with 1 and then 4 executors of 8 cores and
+  *    9 GiB each, `pairs` times (default 2), and print URLs/s per width and
+  *    the N-vs-4N efficiency. Separate executor JVMs bring N× heaps, GCs
+  *    and schedulers, which local[N] (one heap, one GC) cannot emulate.
+  *    Needs the full Spark distribution (`SPARK_HOME`) so the in-process
+  *    Worker can launch executor JVMs; app classes ship via the executor
+  *    extraClassPath.
   *
-  * Session config mirrors the frozen bench session exactly (same shuffle
-  * partitions, AQE, extensions, timezone) so numbers are comparable.
+  * Per-query, per-stage and per-kernel timings live in `perfbench/`
+  * (`python3 perfbench/run.py --trace 1`); physical plans in [[Plans]].
   */
 object BenchExtra {
 
-  private def session(cores: Int): SparkSession = {
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-shuffle")
-    Files.createDirectories(Paths.get(localDir))
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cores.toString))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def addStageListener(s: SparkSession): Unit =
-    s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val ms = (for { st <- i.submissionTime; c <- i.completionTime } yield c - st).getOrElse(-1L)
-        System.err.println(f"[stage ${i.stageId}%4d] ${ms}%6dms tasks=${i.numTasks}%4d ${i.name.take(100)}")
-      }
-    })
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val mode = args.headOption.getOrElse("time")
-    val all = SparkEntry.queries
-    def named(spec: String): Seq[String] =
-      if (spec == "all") all.keys.toSeq.sorted else spec.split(",").toSeq
-
-    mode match {
-      case "explain" =>
-        val names = named(args(1))
-        val suffix = if (args.length > 2) args(2) else "plan"
-        val spark = session(cpus)
-        Files.createDirectories(Paths.get("plans/r06"))
-        names.foreach { n =>
-          val df = all(n)(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.writeString(Paths.get(s"plans/r06/${n}_$suffix.txt"), plan)
-          println(s"wrote plans/r06/${n}_$suffix.txt")
-        }
-        spark.stop()
-
-      case "time" | "noop" =>
-        val names = named(args(1))
-        val reps = if (args.length > 2) args(2).toInt else 3
-        val spark = session(cpus)
-        // same warm-up as the frozen bench
-        try {
-          import org.apache.spark.sql.functions.{col, count}
-          spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .groupBy(col("l_returnflag")).agg(count(col("l_orderkey"))).count()
-        } catch { case _: Throwable => () }
-        names.foreach { n =>
-          val ts = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val df = all(n)(spark, sfDir)
-            if (mode == "noop") df.write.format("noop").mode("overwrite").save()
-            else df.count()
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          println(f"$n%-28s min=${ts.head}%6.3f med=${ts(ts.length / 2)}%6.3f " +
-            ts.map(t => f"$t%.3f").mkString("[", " ", "]"))
-        }
-        spark.stop()
-
-      case "stages" =>
-        val n = args(1)
-        val spark = session(cpus)
-        addStageListener(spark)
-        // job-level wall + the GAP since the previous job ended (planning,
-        // codegen compilation, driver-side work live in the gaps)
-        val lastEnd = new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
-        val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val gap = j.time - lastEnd.get()
-            jobStart.put(j.jobId, j.time)
-            System.err.println(f"[job ${j.jobId}%3d start] gap since prev end ${gap}%5d ms")
-          }
-          override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val wall = j.time - Option(jobStart.get(j.jobId)).getOrElse(j.time)
-            lastEnd.set(j.time)
-            System.err.println(f"[job ${j.jobId}%3d end]   wall ${wall}%5d ms")
-          }
-        })
-        def codegenStats(): (Long, Long) = {
-          import org.apache.spark.metrics.source.CodegenMetrics
-          (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-            CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum)
-        }
-        try {
-          import org.apache.spark.sql.functions.{col, count}
-          spark.read.parquet(s"$sfDir/lineitem.parquet")
-            .groupBy(col("l_returnflag")).agg(count(col("l_orderkey"))).count()
-        } catch { case _: Throwable => () }
-        val (c0, t0c) = codegenStats()
-        System.err.println(s"---- stages of $n ----")
-        val t0 = System.nanoTime()
-        all(n)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (c1, t1c) = codegenStats()
-        println(f"$n total $wall%.3f s; codegen compiles ${c1 - c0} taking ~${(t1c - t0c)}%d ms")
-        spark.stop()
-
-      case "dataflow" =>
-        // run ONE frontier-expansion rep on the bench corpus and print every
-        // physical operator's metrics — per-operator attribution the disabled
-        // UI would otherwise show (guide §7.1/§7.2)
-        val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
-        val pct = if (args.length > 1) args(1).toInt else 100
-        val spark = session(cpus)
-        import org.apache.spark.sql.functions._
-        val web = graft.sources.SyntheticWeb.WebConfig(
-          seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        spark.sql("DROP TABLE IF EXISTS pages_bucketed")
-        spark.sql(
-          s"""CREATE TABLE pages_bucketed
-             |(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
-             |USING parquet
-             |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
-             |LOCATION '$corpus/pages_bucketed'""".stripMargin)
-        val pages = spark.table("pages_bucketed")
-        val cfg = graft.model.CrawlConfig()
-        val robotsBc = graft.operators.Robots.broadcastPolicies(
-          spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-        def frontier = pages.select(col("url"))
-          .where(pmod(xxhash64(col("url")), lit(100)) < pct)
-          .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-          .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-          .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-          .withColumn("depth", lit(0))
-          .withColumn("score", lit(1.0))
-        graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg).count() // warm
-        val df = graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg)
-        val t0 = System.nanoTime()
-        // execute THIS QueryExecution (count() would plan a separate one and
-        // leave these metrics empty)
-        df.queryExecution.toRdd.foreach(_ => ())
-        println(f"rep wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        def dump(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
-          val ms = p.metrics.toSeq.sortBy(_._1).collect {
-            case (k, m) if m.value > 0 => s"$k=${m.value}"
-          }.mkString(" ")
-          println("  " * depth + p.nodeName + "  " + ms.take(260))
-          p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              dump(a.executedPlan, depth + 1)
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => dump(q.plan, depth + 1)
-            case i: org.apache.spark.sql.execution.InputAdapter => dump(i.child, depth + 1)
-            case w: org.apache.spark.sql.execution.WholeStageCodegenExec => dump(w.child, depth + 1)
-            case r: org.apache.spark.sql.execution.ReusedSubqueryExec => dump(r.child, depth + 1)
-            case _ => p.children.foreach(dump(_, depth + 1))
-          }
-        }
-        dump(df.queryExecution.executedPlan, 0)
-        spark.stop()
-
-      case "dfab" =>
-        // ablation ladder over the dataflow plan: each rung strips one layer
-        // so the diffs attribute the rep's cost (guide §1.1 empirical loop)
-        val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
-        val pct = if (args.length > 1) args(1).toInt else 100
-        val spark = session(cpus)
-        import org.apache.spark.sql.functions._
-        val web = graft.sources.SyntheticWeb.WebConfig(
-          seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        spark.sql("DROP TABLE IF EXISTS pages_bucketed")
-        spark.sql(
-          s"""CREATE TABLE pages_bucketed
-             |(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
-             |USING parquet
-             |CLUSTERED BY (url) SORTED BY (url) INTO 64 BUCKETS
-             |LOCATION '$corpus/pages_bucketed'""".stripMargin)
-        val pages = spark.table("pages_bucketed")
-        val cfg = graft.model.CrawlConfig()
-        val robotsBc = graft.operators.Robots.broadcastPolicies(
-          spark, graft.sources.SyntheticWeb.robotsTable(spark, web), cfg)
-        val allowPathUdf = udf((host: String, path: String) =>
-          robotsBc.value.get(host).forall(_.allows(path)))
-        def frontier = pages.select(col("url"))
-          .where(pmod(xxhash64(col("url")), lit(100)) < pct)
-          .withColumn("surt", graft.functions.UrlFunctions.surtUdf(col("url")))
-          .withColumn("host", graft.functions.UrlFunctions.hostOfUdf(col("url")))
-          .withColumn("host_bucket", graft.functions.UrlFunctions.hostBucket(col("host"), cfg.buckets))
-          .withColumn("depth", lit(0))
-          .withColumn("score", lit(1.0))
-        def admitted = frontier.select("surt", "url", "host", "host_bucket", "depth", "score")
-        def joined = pages.select(col("url"), col("html"))
-          .join(admitted.hint("merge"), Seq("url"), "inner")
-          .where(col("html").isNotNull)
-        def exploded = joined
-          .select(
-            col("surt").as("parent_surt"), col("url").as("base_url"),
-            col("depth").as("parent_depth"), col("score"),
-            graft.functions.CanonExpressions.pageScanHashCol(col("html")).as("scan"))
-          .select(col("parent_surt"), col("base_url"), col("parent_depth"),
-            (col("score") / greatest(size(col("scan.links")), lit(1))).as("contrib"),
-            explode(col("scan.links")).as("link"))
-        def resolved = exploded
-          .withColumn("cp", graft.functions.CanonExpressions.resolveCanonCol(col("base_url"), col("link").getField("href")))
-          .where(col("cp").isNotNull && col("cp.url").startsWith("http") &&
-            allowPathUdf(col("cp.host"), col("cp.path")))
-        val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-          ("scan+join only (html bytes)", () => joined.select(length(col("html")).as("n")).groupBy().sum("n")),
-          ("…+scanUDF+explode", () => exploded.select(col("link").getField("href")).groupBy().count()),
-          ("…+resolve+robots", () => resolved.select(col("cp.surt")).groupBy().count()),
-          ("…+agg by surt (full rep)", () => graft.plans.Crawler.expandOnce(spark, frontier, pages, robotsBc, cfg)))
-        variants.foreach { case (label, mk) =>
-          mk().queryExecution.toRdd.foreach(_ => ()) // warm
-          val times = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            mk().queryExecution.toRdd.foreach(_ => ())
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$label%-28s min ${times.min}%6.2f s  ${times.map(t => f"$t%.2f").mkString("[", " ", "]")}")
-        }
-        spark.stop()
-
-      case "cluster" =>
-        // r5 VERDICT "Next round" #2: run the scaling protocol on SEPARATE
-        // EXECUTOR JVMs via Spark's local-cluster master — N vs 4N executor
-        // processes with N× heaps/GCs/schedulers, the honest substitution
-        // local[N] cannot emulate (one heap, one GC). Requires the full
-        // Spark dist (SPARK_HOME) so the in-process Worker can launch
-        // executor processes; app classes ship via executor extraClassPath.
-        // Usage: cluster [pairs]; corpus via SPARK_GRAFT_BENCH_CORPUS.
+    args.headOption match {
+      case Some("cluster") =>
         val corpus = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORPUS", "/dev/shm/graft-shuffle/r6corpus")
         val pairs = if (args.length > 1) args(1).toInt else 2
         val coresPer = 8
@@ -324,49 +88,8 @@ object BenchExtra {
         val bestHi = samples.map(_._2).max
         println(f"[cluster] per-width max: 1x8=${bestLo}%.0f 4x8=${bestHi}%.0f URLs/s, efficiency ${(bestHi / bestLo) / 4}%.4f")
 
-      case "kernel" =>
-        // pure per-row kernel costs (no Spark): the crawl/dataflow hot path is
-        // parquet-decode → scanPageHashed → resolveCanon per link. Times here
-        // bound what per-task-work optimization (guide §1.2 step 2) can buy.
-        val n = if (args.length > 1) args(1).toInt else 20000
-        val cfg = graft.sources.SyntheticWeb.WebConfig(
-          seed = 42L, nPages = 1000000L, nHosts = 100000, density = 6)
-        val htmls = (0 until n).map(i =>
-          graft.sources.SyntheticWeb.renderHtml(cfg, i.toLong)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-        val bases = (0 until n).map(i => graft.sources.SyntheticWeb.pageUrl(cfg, i.toLong)).toArray
-        def bench(label: String)(body: => Long): Unit = {
-          body // warm-up (JIT)
-          val t0 = System.nanoTime(); val sink = body
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"$label%-22s ${dt}%7.3f s  (${dt * 1e9 / n}%8.0f ns/page, sink=$sink)")
-        }
-        var nLinks = 0L
-        bench("scanPageHashed") {
-          var acc = 0L; var i = 0
-          while (i < n) {
-            val ps = graft.functions.Html.scanPageHashed(htmls(i))
-            acc += ps.links.length + ps.textXxh64; nLinks += ps.links.length; i += 1
-          }
-          acc
-        }
-        val links = (0 until n).flatMap { i =>
-          graft.functions.Html.scanPageHashed(htmls(i)).links.map(l => (bases(i), l.href))
-        }.toArray
-        println(s"links: ${links.length} (${links.length.toDouble / n} per page)")
-        bench("resolve+canonParts") {
-          var acc = 0L; var i = 0
-          while (i < links.length) {
-            val cp = graft.functions.UrlCanon.canonParts(
-              graft.functions.UrlCanon.resolve(links(i)._1, links(i)._2))
-            if (cp != null) acc += cp.surt.length
-            i += 1
-          }
-          acc
-        }
-
-      case other =>
-        System.err.println(s"unknown mode '$other' (explain|time|noop|stages|kernel)")
+      case _ =>
+        System.err.println("usage: graft.BenchExtra cluster [pairs]")
         sys.exit(2)
     }
   }

@@ -32,7 +32,6 @@ object CrawlMain {
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.locality.wait", "0")
       .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("GRAFT_CODEGEN", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")

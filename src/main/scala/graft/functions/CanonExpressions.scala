@@ -47,55 +47,11 @@ object CanonKernel {
     if (s == null) null else UTF8String.fromString(s)
   }
 
-  /** One UTF-8 decode → (links, text), as Catalyst-internal values. */
-  def pageScan(html: Array[Byte]): InternalRow = {
-    val ps = Html.scanPage(html)
-    val links = new Array[Any](ps.links.length)
-    var i = 0
-    val it = ps.links.iterator
-    while (it.hasNext) {
-      val l = it.next()
-      links(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(links), UTF8String.fromString(ps.text)))
-  }
-
   val canonPartsType: StructType = StructType(Seq(
     StructField("url", StringType), StructField("host", StringType),
     StructField("path", StringType), StructField("surt", StringType)))
 
-  val pageScanType: StructType = StructType(Seq(
-    StructField("links", ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("anchor", StringType))))),
-    StructField("text", StringType)))
-
-  /** Hot-path variant: links + xxhash64-of-text, no text materialization
-    * (zero page-sized garbage — see Html.textHashFromString).
-    */
-  def pageScanHashed(html: Array[Byte]): InternalRow = {
-    val ps = Html.scanPageHashed(html)
-    val links = new Array[Any](ps.links.length)
-    var i = 0
-    val it = ps.links.iterator
-    while (it.hasNext) {
-      val l = it.next()
-      links(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(l.href), UTF8String.fromString(l.anchor)))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](
-      new GenericArrayData(links), java.lang.Long.valueOf(ps.textXxh64)))
-  }
-
-  val pageScanHashedType: StructType = StructType(Seq(
-    StructField("links", ArrayType(StructType(Seq(
-      StructField("href", StringType), StructField("anchor", StringType))))),
-    StructField("text_xxh64", LongType)))
-
-  /** Round-6 crawl-hot-path variant: hrefs only (no anchors) + text hash —
+  /** Crawl hot path (round 6): hrefs only (no anchors) + text hash —
     * the fetch/candidate pipeline never reads anchors (see
     * Html.scanPageHrefs).
     */
@@ -192,47 +148,12 @@ case class SurtOf(child: Expression) extends UnaryExpression with ExpectsInputTy
     copy(child = newChild)
 }
 
-/** Fused page scan: one UTF-8 decode → (links array, extracted text). */
-case class PageScan(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = CanonKernel.pageScanType
-  override def nullable: Boolean = true
-  override def prettyName: String = "page_scan"
-  override protected def nullSafeEval(html: Any): Any =
-    CanonKernel.pageScan(html.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |${ev.value} = graft.functions.CanonKernel.pageScan($html);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Fused page scan for the crawl hot path: links + xxhash64(text). */
-case class PageScanHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = CanonKernel.pageScanHashedType
-  override def nullable: Boolean = true
-  override def prettyName: String = "page_scan_hash"
-  override protected def nullSafeEval(html: Any): Any =
-    CanonKernel.pageScanHashed(html.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |${ev.value} = graft.functions.CanonKernel.pageScanHashed($html);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Fused page scan, crawl hot path (round 6): hrefs array + xxhash64(text),
   * no anchor extraction — anchors are never consumed on the crawl/candidate
   * path, and their per-link sub-scan + entity decode + String cost ~30-40%
-  * of the scan kernel (BenchExtra `kernel`; hrefs ≡ links.href pinned in
-  * CanonExprSpec).
+  * of the scan kernel (OPTIMIZATION_r06.md; perfbench
+  * `functions.Html.scan_ns_per_page` times the scan; hrefs ≡ links.href
+  * pinned in CanonExprSpec).
   */
 case class PageScanHrefsHash(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
@@ -255,17 +176,16 @@ case class PageScanHrefsHash(child: Expression) extends UnaryExpression with Exp
   * the §1.1 ablation): one output row per href in `links` whose
   * resolve→canonicalize succeeds, as FLAT columns (url, host, path, surt).
   *
-  * Replaces `explode(links)` + `resolveCanonCol(base, href)` + an
-  * `isNotNull` filter on the crawl/candidate path. Two measured costs
-  * disappear: (1) Catalyst pushes the candidate filters below the
-  * projection that computes the `cp` struct, so the resolve+canon kernel
-  * ran ≥2× per link (the guide-§4.4 duplication, here with a native
+  * Two measured costs of resolving each exploded link into a struct column
+  * are avoided: (1) Catalyst pushes the candidate filters below the
+  * projection that computes that struct, so the resolve+canon kernel ran
+  * ≥2× per link (the guide-§4.4 duplication, here with a native
   * expression); a Generator's output columns are plain attributes, which
   * filters reference without re-evaluating anything. (2) the per-link
-  * intermediate (href struct row from explode, then a 4-field `cp` struct
+  * intermediate (href struct row from explode, then a 4-field struct
   * copied through two more projections) never materializes — the row the
-  * generator yields IS the final shape. Dropped-null semantics are exactly
-  * the old `cp.isNotNull` filter (pinned ≡ UDF+explode in CanonExprSpec).
+  * generator yields IS the final shape. Links whose resolve→canonicalize
+  * is null are dropped (pinned ≡ UDF+explode+isNotNull in CanonExprSpec).
   */
 case class ResolveLinksGen(left: Expression, right: Expression)
     extends BinaryExpression
@@ -316,12 +236,8 @@ case class ResolveLinksGen(left: Expression, right: Expression)
 /** Column factories for the native expressions. */
 object CanonExpressions {
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-  def resolveCanonCol(base: Column, href: Column): Column =
-    column(ResolveCanonSurt(expression(base), expression(href)))
   def canonCol(raw: Column): Column = column(CanonUrl(expression(raw)))
   def surtCol(raw: Column): Column = column(SurtOf(expression(raw)))
-  def pageScanCol(html: Column): Column = column(PageScan(expression(html)))
-  def pageScanHashCol(html: Column): Column = column(PageScanHash(expression(html)))
   def pageScanHrefsCol(html: Column): Column = column(PageScanHrefsHash(expression(html)))
   /** Fused explode+resolve+canon: use in a select; the analyzer lifts it into
     * a `Generate` node yielding (url, host, path, surt) per resolvable link. */

@@ -57,7 +57,7 @@ case class ExtractLinksGen(child: Expression)
     if (v == null) Iterator.empty
     else {
       val bytes = v.asInstanceOf[Array[Byte]]
-      // same byte-route guard as Html.scanPageHashed: the byte kernel is
+      // same byte-route guard as Html.scanPageHrefs: the byte kernel is
       // only char-exact on valid UTF-8 without the two non-ASCII chars that
       // case-fold to ASCII (U+0130/U+212A in tag names); anything else must
       // take the char route or the generator diverges from the frozen X1

@@ -235,16 +235,6 @@ object Html {
   /** X1 over html bytes (UTF-8). */
   def extractLinks(html: Array[Byte]): Array[Link] = extractLinksFromString(decodeUtf8(html))
 
-  /** Fused page scan for the crawl hot path: one UTF-8 decode feeding both
-    * extractors (text and links are separate passes over the shared string).
-    */
-  final case class PageScan(links: Array[Link], text: String)
-
-  def scanPage(html: Array[Byte]): PageScan = {
-    val s = decodeUtf8(html)
-    PageScan(extractLinksFromString(s), extractTextFromString(s))
-  }
-
   // ---- allocation-free text hashing for the crawl hot path ----
   //
   // The engine never stores extracted text — only xxhash64(text) (fetch-log
@@ -373,18 +363,16 @@ object Html {
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       Array.emptyByteArray, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, 0, 42L)
 
-  /** Hot-path scan result: links + text hash, no text materialization. */
-  final case class PageScanHashed(links: Array[Link], textXxh64: Long)
-
   /** Round-6 crawl-hot-path scan: href list + text hash, NO anchor text.
     * The crawl/dataflow pipeline never reads anchors (fetch log keeps only
     * n_links + text_xxh64; candidate generation keys on href), yet the
     * anchor extraction inside [[extractLinksFromBytes]] pays a per-link
     * sub-scan + entity decode + collapse + String, ~30-40% of the scan
-    * kernel (BenchExtra `kernel`). Traversal, in-page dedup (first raw href
-    * wins) and ordering are IDENTICAL to the Link path — pinned by
-    * CanonExprSpec (hrefs ≡ links.map(_.href)); X1's anchor-carrying
-    * extractors are untouched.
+    * kernel (OPTIMIZATION_r06.md; perfbench's
+    * `functions.Html.scan_ns_per_page` times this scan). Traversal, in-page
+    * dedup (first raw href wins) and ordering are IDENTICAL to the Link
+    * path — pinned by CanonExprSpec (hrefs ≡ links.map(_.href)); X1's
+    * anchor-carrying extractors are untouched.
     */
   final case class PageScanHrefs(hrefs: Array[String], textXxh64: Long)
 
@@ -393,6 +381,13 @@ object Html {
     else if (isValidUtf8(html) && !hasAsciiCaseFoldingChar(html))
       PageScanHrefs(extractHrefsFromBytes(html), textHashFromBytes(html))
     else {
+      // invalid UTF-8 (replacement-char semantics) or a non-ASCII char whose
+      // Character.toLowerCase lands in ASCII (U+0130 'İ'→'i', U+212A 'K'→'k' —
+      // the ONLY two such code points, pinned exhaustively by a test): the
+      // frozen X1/X2 char semantics treat e.g. <scrİpt> as a script tag, which
+      // the ASCII-only byte fold cannot see — decode once and take the char
+      // route. Both chars are vanishingly rare in real pages, so the fast
+      // path keeps its coverage.
       val s = decodeUtf8(html)
       PageScanHrefs(extractHrefsFromString(s), textHashFromString(s))
     }
@@ -486,22 +481,6 @@ object Html {
     }
     out.toArray
   }
-
-  def scanPageHashed(html: Array[Byte]): PageScanHashed =
-    if (html == null) PageScanHashed(Array.empty, emptyTextHash)
-    else if (isValidUtf8(html) && !hasAsciiCaseFoldingChar(html))
-      PageScanHashed(extractLinksFromBytes(html), textHashFromBytes(html))
-    else {
-      // invalid UTF-8 (replacement-char semantics) or a non-ASCII char whose
-      // Character.toLowerCase lands in ASCII (U+0130 'İ'→'i', U+212A 'K'→'k' —
-      // the ONLY two such code points, pinned exhaustively by a test): the
-      // frozen X1/X2 char semantics treat e.g. <scrİpt> as a script tag, which
-      // the ASCII-only byte fold cannot see — decode once and take the char
-      // route. Both chars are vanishingly rare in real pages, so the fast
-      // path keeps its coverage.
-      val s = decodeUtf8(html)
-      PageScanHashed(extractLinksFromString(s), textHashFromString(s))
-    }
 
   // ---- byte-level scanning (valid UTF-8 only) ----
   //

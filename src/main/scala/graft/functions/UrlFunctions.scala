@@ -40,8 +40,8 @@ object UrlFunctions {
   val extractLinksUdf = udf((html: Array[Byte]) => Html.extractLinks(html))
   val extractTextUdf = udf((html: Array[Byte]) => Html.extractText(html))
 
-  /** Fused hot-path UDFs (one decode / one parse pipeline per call). */
-  val pageScanUdf = udf((html: Array[Byte]) => Html.scanPage(html))
+  /** Fused resolve+canon UDF (one parse pipeline per call): the reference
+    * [[ResolveCanonSurt]] and [[ResolveLinksGen]] are pinned against. */
   val resolveCanonUdf = udf((base: String, href: String) =>
     Option(UrlCanon.canonParts(UrlCanon.resolve(base, href))))
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * optimization guide §2.2/§6).
   *
   * Two symmetric failure modes were measured at bench scale (sf0.1, 32
-  * cores — BenchExtra `stages` dumps, OPTIMIZATION_r06.md):
+  * cores — per-stage dumps in OPTIMIZATION_r06.md):
   *
   *  - a sub-`maxPartitionBytes` parquet input plans as ONE partition, so a
   *    UDF-heavy subtree above it (shingling, minhash, simhash, LSH

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CanonExpressions, UrlFunctions}
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+import graft.functions.{CanonExpressions, PageScanHrefsHash, ResolveCanonSurt, UrlFunctions}
 
 /** M12: the native Catalyst expressions must be value-identical to the UDFs
   * they replace (same kernels, different execution surface), and the
@@ -15,13 +17,15 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     spark, graft.sources.SyntheticWeb.WebConfig(seed = 42L, nPages = 300, nHosts = 12)).toDF()
 
   test("pageScan expression ≡ pageScan UDF on the corpus") {
-    val viaExpr = pages.select(col("url"), CanonExpressions.pageScanCol(col("html")).as("s"))
-      .select(col("url"), col("s.text"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text"), col("l.href"), col("l.anchor"))
+    // the page-scan expression (PageScanHrefsHash) against the UDF page scan
+    // built from the X1/X2 operators: same hrefs in the same per-page order,
+    // and the text hash equals hashing the extracted text
+    val viaExpr = pages.select(col("url"), CanonExpressions.pageScanHrefsCol(col("html")).as("s"))
+      .select(col("url"), col("s.text_xxh64"), posexplode(col("s.links")).as(Seq("pos", "href")))
       .collect().map(_.toSeq).toSet
-    val viaUdf = pages.select(col("url"), UrlFunctions.pageScanUdf(col("html")).as("s"))
-      .select(col("url"), col("s.text"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text"), col("l.href"), col("l.anchor"))
+    val viaUdf = pages.select(col("url"), xxhash64(UrlFunctions.extractTextUdf(col("html"))).as("h"),
+        posexplode(UrlFunctions.extractLinksUdf(col("html"))).as(Seq("pos", "l")))
+      .select(col("url"), col("h"), col("pos"), col("l.href"))
       .collect().map(_.toSeq).toSet
     assert(viaExpr == viaUdf)
     assert(viaExpr.nonEmpty, "trivially-empty comparison")
@@ -31,7 +35,7 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     val links = pages.select(col("url").as("base"),
       explode(UrlFunctions.extractLinksUdf(col("html"))).as("l"))
     val viaExpr = links.select(col("base"),
-        CanonExpressions.resolveCanonCol(col("base"), col("l.href")).as("cp"))
+        column(ResolveCanonSurt(expression(col("base")), expression(col("l.href")))).as("cp"))
       .select(col("base"), col("cp.url"), col("cp.host"), col("cp.path"), col("cp.surt"))
       .collect().map(_.toSeq).toSet
     val viaUdf = links.select(col("base"),
@@ -81,7 +85,7 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     val rows = pages.select(col("html")).collect()
     rows.foreach { r =>
       val html = r.getAs[Array[Byte]](0)
-      val viaHash = graft.functions.Html.scanPageHashed(html).textXxh64
+      val viaHash = graft.functions.Html.scanPageHrefs(html).textXxh64
       val s = UTF8String.fromString(graft.functions.Html.extractText(html))
       val exp = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
         s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
@@ -90,33 +94,21 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     assert(rows.nonEmpty)
   }
 
-  test("pageScanHash expression ≡ pageScan UDF links + xxhash64(text)") {
-    val viaHash = pages.select(col("url"),
-        CanonExpressions.pageScanHashCol(col("html")).as("s"))
-      .select(col("url"), col("s.text_xxh64"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("text_xxh64"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    val viaUdf = pages.select(col("url"), UrlFunctions.pageScanUdf(col("html")).as("s"))
-      .select(col("url"), xxhash64(col("s.text")).as("h"), explode(col("s.links")).as("l"))
-      .select(col("url"), col("h"), col("l.href"), col("l.anchor"))
-      .collect().map(_.toSeq).toSet
-    assert(viaHash == viaUdf)
-    assert(viaHash.nonEmpty, "trivially-empty comparison")
-  }
-
   test("byte-level scan ≡ char-level scan — corpus + adversarial byte vectors") {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.functions.Html
-    def reference(bytes: Array[Byte]): (Seq[(String, String)], Long) = {
+    def pairs(links: Array[Html.Link]) = links.toSeq.map(l => (l.href, l.anchor))
+    // the byte kernels are only char-exact behind the byte-route guard that
+    // scanPageHrefs and ExtractLinksGen apply; vectors outside it must be
+    // caught by the guard, and the routed text hash must still agree
+    def check(bytes: Array[Byte], tag: String, byteRoute: Boolean = true): Unit = {
       val s = new String(bytes, UTF_8)
-      (Html.extractLinksFromString(s).toSeq.map(l => (l.href, l.anchor)),
-        Html.textHashFromString(s))
-    }
-    def check(bytes: Array[Byte], tag: String): Unit = {
-      val got = Html.scanPageHashed(bytes)
-      val (refLinks, refHash) = reference(bytes)
-      assert(got.links.toSeq.map(l => (l.href, l.anchor)) == refLinks, s"links [$tag]")
-      assert(got.textXxh64 == refHash, s"text hash [$tag]")
+      assert((Html.isValidUtf8(bytes) && !Html.hasAsciiCaseFoldingChar(bytes)) == byteRoute,
+        s"route [$tag]")
+      if (byteRoute)
+        assert(pairs(Html.extractLinksFromBytes(bytes)) == pairs(Html.extractLinksFromString(s)),
+          s"links [$tag]")
+      assert(Html.scanPageHrefs(bytes).textXxh64 == Html.textHashFromString(s), s"text hash [$tag]")
     }
     val strings = Seq(
       "<a href=\"héllo/漢.html\">ünïcode 😀 anchor</a> täil",
@@ -124,15 +116,17 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
       "<script>var s='<a href=\"no\">';</script><a href=\"yes\">ok é</a>",
       "<a HREF=unquoted/路径>anchor</a>",
       "<a href=\"a\">one</a><a href=\"a\">dup</a><a href=\"b\">two</a>",
-      "no links, just &lt;text&gt; &nbsp; ws\t\n collapse",
-      // non-ASCII chars whose Character.toLowerCase IS an ASCII letter:
-      // the frozen char semantics see <scrİpt> as a script tag; the
-      // ASCII-only byte fold cannot — these must route to the char path
+      "no links, just &lt;text&gt; &nbsp; ws\t\n collapse")
+    strings.foreach(s => check(s.getBytes(UTF_8), s.take(30)))
+    // non-ASCII chars whose Character.toLowerCase IS an ASCII letter:
+    // the frozen char semantics see <scrİpt> as a script tag; the
+    // ASCII-only byte fold cannot — these must route to the char path
+    val folding = Seq(
       "<scrİpt>hidden('<a href=\"no\">')</scrİpt><a href=\"yes\">ok</a>",
       "<SCRİPT>x</SCRİPT>visible", // İ in both open and close tag
       "<a İd=1 href=\"k\">kelvin K anchor</a>",
       "<styLE>a{}</style><stİle>not a style tag</stİle>")
-    strings.foreach(s => check(s.getBytes(UTF_8), s.take(30)))
+    folding.foreach(s => check(s.getBytes(UTF_8), s.take(30), byteRoute = false))
     // invalid UTF-8 → must take the char-path fallback and still agree
     val invalid = Seq(
       Array[Byte]('<', 'a', ' ', 'h', 'r', 'e', 'f', '=', '"', 'x', '"', '>', 0xff.toByte, '<', '/', 'a', '>'),
@@ -141,7 +135,7 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
       Array[Byte]('a', 0xed.toByte, 0xa0.toByte, 0x80.toByte, 'b')) // surrogate
     invalid.zipWithIndex.foreach { case (b, i) =>
       assert(!graft.functions.Html.isValidUtf8(b), s"vector $i should be invalid")
-      check(b, s"invalid-$i")
+      check(b, s"invalid-$i", byteRoute = false)
     }
     assert(graft.functions.Html.isValidUtf8("é漢😀".getBytes(UTF_8)))
     // whole corpus through both entrypoints
@@ -169,10 +163,10 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.functions.Html
     def check(bytes: Array[Byte], tag: String): Unit = {
-      val full = Html.scanPageHashed(bytes)
+      val s = new String(bytes, UTF_8)
       val hrefs = Html.scanPageHrefs(bytes)
-      assert(hrefs.hrefs.toSeq == full.links.toSeq.map(_.href), s"hrefs [$tag]")
-      assert(hrefs.textXxh64 == full.textXxh64, s"hash [$tag]")
+      assert(hrefs.hrefs.toSeq == Html.extractLinksFromString(s).toSeq.map(_.href), s"hrefs [$tag]")
+      assert(hrefs.textXxh64 == Html.textHashFromString(s), s"hash [$tag]")
     }
     val strings = Seq(
       "<a href=\"a\">one</a><a href=\"a\">dup</a><a href=\"b\">two</a>",
@@ -207,15 +201,29 @@ class CanonExprSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("expression pipeline runs inside whole-stage codegen (no fallback)") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // the scan → fused-resolve shape Crawler.expandOnce runs
     val df = pages.select(col("url"),
-        CanonExpressions.pageScanCol(col("html")).as("s"))
-      .select(col("url"), explode(col("s.links")).as("l"))
-      .select(CanonExpressions.resolveCanonCol(col("url"), col("l.href")).as("cp"))
-      .where(col("cp").isNotNull)
-      .select(col("cp.surt"))
+        CanonExpressions.pageScanHrefsCol(col("html")).as("s"))
+      .select(CanonExpressions.resolveLinksGenCol(col("url"), col("s.links"))
+        .as(Seq("curl", "chost", "cpath", "csurt")))
+      .where(col("curl").startsWith("http"))
+      .select(col("csurt"))
     df.collect() // force execution so codegen actually compiles
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("*("), s"no whole-stage-codegen span:\n$plan")
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // operators compiled into a codegen stage: its subtree up to the
+    // InputAdapter boundaries where the next stage's input starts
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    val compiled = plan.collect { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+    assert(compiled.exists(_.expressions.exists(_.exists(_.isInstanceOf[PageScanHrefsHash]))),
+      s"page_scan_hrefs_hash is not inside a whole-stage-codegen stage:\n$plan")
   }
 
   test("SQL surface: every registered function is callable from spark.sql") {
